@@ -39,20 +39,6 @@ class TableContract:
     primary_key: list[str] = field(default_factory=list)
 
 
-# Example contract mirroring the reference's resolutions target shape
-# (sql/init_core.sql: TEXT/NOT NULL/defaults idiom).
-RESOLUTIONS_CONTRACT = TableContract(
-    table="resolutions",
-    columns=[
-        ColumnContract("id", "bigint", nullable=False),
-        ColumnContract("title", "string", nullable=False, default="(untitled)"),
-        ColumnContract("source", "string", nullable=False, default="unknown"),
-        ColumnContract("file_id", "string"),
-    ],
-    primary_key=["id"],
-)
-
-
 def apply_contract(df: DataFrame, contract: TableContract) -> DataFrame:
     """Shape ``df`` to the contract: declared order, typed, defaults filled.
 
@@ -436,6 +422,10 @@ PIPELINE_CONTRACTS: dict[str, TableContract] = {
         primary_key=["event_id"],
     ),
 }
+
+# The reference's resolutions target shape (sql/init_core.sql:
+# TEXT/NOT NULL/defaults idiom), under the name the gate queries import.
+RESOLUTIONS_CONTRACT = PIPELINE_CONTRACTS["core.resolutions"]
 
 
 def enforce_contract(df: DataFrame, contract: TableContract) -> DataFrame:

@@ -21,6 +21,9 @@ file per partition).
 from __future__ import annotations
 
 import logging
+import os
+import shutil
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -264,8 +267,6 @@ def compact_files(
     maintenance window.
     """
     import math
-    import os
-    import shutil
 
     df = spark.read.format(fmt).load(path)
     n_rows = df.count()
@@ -377,16 +378,39 @@ def read_pruned(
     )
 
 
-def _versions(table_dir: str) -> list[int]:
-    import os
+def _atomic_write(path: str, text: str) -> None:
+    """Replace ``path`` with ``text`` durably: write a temp sibling, fsync
+    it, then one POSIX-atomic rename — a crash leaves the old content or
+    the new, never a torn file.  The single commit primitive behind every
+    manifest pointer, the incremental bookmark and the runner ledger."""
+    tmp = path + ".tmp"
+    with open(tmp, "w", encoding="utf-8") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
 
-    if not os.path.isdir(table_dir):
+
+def _read_pointer(root: str, pointer: str) -> int | None:
+    """The number a manifest pointer file (``_CURRENT``/``_SNAPSHOT``)
+    publishes, or None if nothing was ever published under ``root``."""
+    path = os.path.join(root, pointer)
+    if not os.path.exists(path):
+        return None
+    with open(path, encoding="utf-8") as f:
+        return int(f.read().strip())
+
+
+def _numbered_dirs(parent: str, prefix: str) -> list[int]:
+    """Sorted ``n`` of every ``<prefix><n>`` data directory in ``parent``
+    — published, retained and orphaned alike."""
+    if not os.path.isdir(parent):
         return []
     out = []
-    for d in os.listdir(table_dir):
-        if d.startswith("v=") and os.path.isdir(os.path.join(table_dir, d)):
+    for d in os.listdir(parent):
+        if d.startswith(prefix) and os.path.isdir(os.path.join(parent, d)):
             try:
-                out.append(int(d[2:]))
+                out.append(int(d[len(prefix):]))
             except ValueError:
                 continue
     return sorted(out)
@@ -397,13 +421,7 @@ def current_version(table_dir: str) -> int | None:
     never published).  Readers MUST resolve this, not the directory
     listing — data directories newer than the manifest are in-flight or
     crashed writes."""
-    import os
-
-    manifest = os.path.join(table_dir, "_CURRENT")
-    if not os.path.exists(manifest):
-        return None
-    with open(manifest, encoding="utf-8") as f:
-        return int(f.read().strip())
+    return _read_pointer(table_dir, "_CURRENT")
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -413,10 +431,7 @@ class ConcurrentWriteError(RuntimeError):
     the holder commits (or after the stale window if it crashed)."""
 
 
-from contextlib import contextmanager as _contextmanager  # noqa: E402
-
-
-@_contextmanager
+@contextmanager
 def _writer_lock(dir_path: str, stale_after_s: float = 3600.0):
     """Best-effort single-writer lock for the manifest-pointer layouts
     (VERDICT r8 item 2) — turns the documented single-writer caveat of
@@ -452,7 +467,6 @@ def _writer_lock(dir_path: str, stale_after_s: float = 3600.0):
     Like Iceberg's/Delta's commit protocols this assumes the filesystem
     gives atomic create/rename (POSIX, HDFS do; raw S3 needs a DynamoDB-ish
     coordinator — same caveat those formats document)."""
-    import os
     import time
     import uuid
 
@@ -542,6 +556,45 @@ def _writer_lock(dir_path: str, stale_after_s: float = 3600.0):
             pass
 
 
+def _publish_locked(
+    root: str,
+    tables: dict[str, DataFrame],
+    prefix: str,
+    pointer: str,
+    keep: int,
+    fmt: str,
+    partition_by: list[str] | None = None,
+) -> int:
+    """The manifest-pointer commit behind every publish path, for callers
+    that ALREADY hold ``root``'s :func:`_writer_lock`.
+
+    Each ``tables`` entry lands in ``<root>/<name>/<prefix><n>`` (the name
+    ``""`` puts it directly under ``root``), then ONE :func:`_atomic_write`
+    of ``<root>/<pointer>`` makes all of them visible together.  ``n``
+    grows past every existing directory, so a crashed write's orphan is
+    never reused.  GC then keeps the newest ``keep`` PUBLISHED numbers:
+    only numbers at or below the OLD pointer ever were published; the rest
+    are crashed-write orphans and always sweep.  Returns ``n``.
+    """
+    cur = _read_pointer(root, pointer)
+    dirs = [os.path.join(root, name) for name in tables]
+    existing = {n for d in dirs for n in _numbered_dirs(d, prefix)}
+    new = max(existing | {cur or 0}) + 1
+    for d, df in zip(dirs, tables.values()):
+        writer = df.write.mode("overwrite").format(fmt)
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.save(os.path.join(d, f"{prefix}{new}"))
+    _atomic_write(os.path.join(root, pointer), str(new))
+    published = sorted((n for n in existing if cur is not None and n <= cur), reverse=True)
+    survivors = {new, *published[: max(keep - 1, 0)]}
+    for d in dirs:
+        for n in _numbered_dirs(d, prefix):
+            if n not in survivors:
+                shutil.rmtree(os.path.join(d, f"{prefix}{n}"), ignore_errors=True)
+    return new
+
+
 def write_versioned(
     df: DataFrame,
     table_dir: str,
@@ -553,7 +606,7 @@ def write_versioned(
     """Atomic table publish via a manifest pointer — the poor-man's
     transactional table that closes :func:`compact_files`' documented swap
     window without Delta/Iceberg: data lands in an immutable
-    ``v=<n>/`` directory, then ONE ``os.replace`` of the ``_CURRENT``
+    ``v=<n>/`` directory, then ONE atomic rename of the ``_CURRENT``
     manifest (POSIX rename atomicity — also how Iceberg's
     version-hint/metadata pointer commit works) makes it visible.  There
     is NO instant where a reader can see a missing or half-written table:
@@ -571,40 +624,14 @@ def write_versioned(
     Returns the published version number.  Writer concurrency is ENFORCED
     by :func:`_writer_lock`: a second concurrent writer raises
     :class:`ConcurrentWriteError` before touching any state (a crashed
-    holder's lock is taken over after ``lock_stale_after_s``).
+    holder's lock is taken over after ``lock_stale_after_s``).  The commit
+    itself is :func:`_publish_locked`, shared with :func:`publish_snapshot`
+    and the streaming versioned sinks.
     """
-    import os
-    import shutil
-
     with _writer_lock(table_dir, stale_after_s=lock_stale_after_s):
-        cur = current_version(table_dir)
-        existing = _versions(table_dir)
-        new_v = max(existing + ([cur] if cur is not None else [0])) + 1
-        data_dir = os.path.join(table_dir, f"v={new_v}")
-        writer = df.write.mode("overwrite").format(fmt)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.save(data_dir)
-        # atomic publish: write-temp + rename, never truncate-in-place
-        tmp_manifest = os.path.join(table_dir, "_CURRENT.tmp")
-        with open(tmp_manifest, "w", encoding="utf-8") as f:
-            f.write(str(new_v))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp_manifest, os.path.join(table_dir, "_CURRENT"))
-        # GC: keep the newest `keep_versions` PUBLISHED snapshots — only
-        # versions at or below the OLD manifest ever were published; dirs
-        # between it and new_v are crashed-write orphans and always sweep
-        keep = {new_v}
-        for v in reversed(_versions(table_dir)):
-            if len(keep) >= keep_versions:
-                break
-            if cur is not None and v <= cur:
-                keep.add(v)
-        for v in _versions(table_dir):
-            if v not in keep:
-                shutil.rmtree(os.path.join(table_dir, f"v={v}"), ignore_errors=True)
-        return new_v
+        return _publish_locked(
+            table_dir, {"": df}, "v=", "_CURRENT", keep_versions, fmt, partition_by
+        )
 
 
 def read_versioned(
@@ -618,8 +645,6 @@ def read_versioned(
     the retention window).  The resolve-then-scan order IS the isolation
     mechanism — the returned DataFrame is pinned to its snapshot directory
     and unaffected by later publishes."""
-    import os
-
     v = version if version is not None else current_version(table_dir)
     if v is None:
         raise FileNotFoundError(f"no published version at {table_dir}")
@@ -665,7 +690,8 @@ def publish_snapshot(
 
     Layout: ``<wh>/<table>/s=<n>/`` data directories, one
     ``<wh>/_SNAPSHOT`` file holding the published snapshot number.  The
-    commit is a single ``os.replace`` (POSIX-atomic), after every data
+    commit is one atomic pointer rename (:func:`_publish_locked`, the
+    same commit :func:`write_versioned` uses), after every data
     write finished — a crash before it leaves only orphan ``s=<n>`` dirs
     (invisible; swept by the next successful publish); readers that
     resolved the old number keep reading immutable old directories
@@ -676,65 +702,7 @@ def publish_snapshot(
     published snapshot number.
     """
     with _writer_lock(warehouse_dir):
-        return _publish_snapshot_locked(tables, warehouse_dir, fmt, keep_snapshots)
-
-
-def _publish_snapshot_locked(
-    tables: dict[str, DataFrame],
-    warehouse_dir: str,
-    fmt: str,
-    keep_snapshots: int,
-) -> int:
-    """:func:`publish_snapshot`'s body, for callers that ALREADY hold the
-    warehouse writer lock (``incremental_publish_cycle`` serializes its
-    whole read-accumulate-publish-commit critical section under it)."""
-    import os
-    import shutil
-
-    cur = _read_snapshot_no(warehouse_dir)
-    existing = set()
-    for t in tables:
-        tdir = os.path.join(warehouse_dir, t)
-        if os.path.isdir(tdir):
-            for d in os.listdir(tdir):
-                if d.startswith("s="):
-                    try:
-                        existing.add(int(d[2:]))
-                    except ValueError:
-                        pass
-    new_s = max(existing | ({cur} if cur is not None else {0})) + 1
-    for name, df in tables.items():
-        df.write.mode("overwrite").format(fmt).save(
-            os.path.join(warehouse_dir, name, f"s={new_s}")
-        )
-    tmp = os.path.join(warehouse_dir, "_SNAPSHOT.tmp")
-    with open(tmp, "w", encoding="utf-8") as f:
-        f.write(str(new_s))
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(warehouse_dir, "_SNAPSHOT"))
-    # GC: keep the newest keep_snapshots PUBLISHED snapshots per table
-    keep = {new_s}
-    published = sorted(
-        [s for s in existing if cur is not None and s <= cur], reverse=True
-    )
-    for s in published:
-        if len(keep) >= keep_snapshots:
-            break
-        keep.add(s)
-    for t in tables:
-        tdir = os.path.join(warehouse_dir, t)
-        if not os.path.isdir(tdir):
-            continue
-        for d in os.listdir(tdir):
-            if d.startswith("s="):
-                try:
-                    v = int(d[2:])
-                except ValueError:
-                    continue
-                if v not in keep:
-                    shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
-    return new_s
+        return _publish_locked(warehouse_dir, tables, "s=", "_SNAPSHOT", keep_snapshots, fmt)
 
 
 def incremental_publish_cycle(
@@ -796,22 +764,9 @@ def incremental_publish_cycle(
         derived = build_tables(raw)
         if "raw" in derived:
             raise ValueError("build_tables must not emit a table named 'raw'")
-        snap = _publish_snapshot_locked(
-            {"raw": raw, **derived}, warehouse_dir, fmt, keep_snapshots=2
-        )
+        snap = _publish_locked(warehouse_dir, {"raw": raw, **derived}, "s=", "_SNAPSHOT", 2, fmt)
         commit()
         return snap, new_mark
-
-
-
-def _read_snapshot_no(warehouse_dir: str) -> int | None:
-    import os
-
-    p = os.path.join(warehouse_dir, "_SNAPSHOT")
-    if not os.path.exists(p):
-        return None
-    with open(p, encoding="utf-8") as f:
-        return int(f.read().strip())
 
 
 def read_snapshot_table(
@@ -821,9 +776,7 @@ def read_snapshot_table(
     reads in the same snapshot resolution are mutually consistent; pin the
     number once per job (this helper resolves per call) for multi-table
     jobs."""
-    import os
-
-    s = _read_snapshot_no(warehouse_dir)
+    s = _read_pointer(warehouse_dir, "_SNAPSHOT")
     if s is None:
         raise FileNotFoundError(f"no published snapshot in {warehouse_dir}")
     return spark.read.format(fmt).load(os.path.join(warehouse_dir, table, f"s={s}"))
@@ -851,8 +804,6 @@ def incremental_partitions(
     as strings — zero-pad numeric partition values at write time (date
     strings are already safe).
     """
-    import os
-
     mark = None
     if os.path.exists(bookmark_file):
         with open(bookmark_file, encoding="utf-8") as f:
@@ -869,14 +820,8 @@ def incremental_partitions(
     new_mark = new_vals[-1] if new_vals else None
 
     def commit() -> None:
-        if new_mark is None:
-            return
-        tmp = bookmark_file + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(new_mark)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, bookmark_file)
+        if new_mark is not None:
+            _atomic_write(bookmark_file, new_mark)
 
     return df, new_mark, commit
 
@@ -914,8 +859,6 @@ def avro_available(spark: SparkSession) -> bool:
             or "DATA_SOURCE_NOT_FOUND" in msg
         ):
             return False
-        import logging
-        import shutil
         import tempfile
 
         logging.getLogger(__name__).warning(

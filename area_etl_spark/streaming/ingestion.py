@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from area_etl_spark.operators.dedup import incremental_dedup
+from area_etl_spark.sources.load import current_version, read_versioned, write_versioned
 
 _EMPTY_INDEX_SCHEMA = "content_hash string, batch_id long"
 
@@ -150,9 +151,31 @@ class SnapshotScaleError(ValueError):
     compact under a maintenance window) instead."""
 
 
+def _versioned_sink(table_dir: str, keep_versions: int, max_rows: int, merge, too_big):
+    """The foreachBatch body both versioned sinks share: ``merge(batch_df,
+    batch_id, prev)`` builds the next snapshot from the micro-batch and the
+    published one (``prev`` is None before the first publish); the result
+    is materialized, size-guarded — ``too_big(n)`` is the
+    :class:`SnapshotScaleError` text — and published with
+    :func:`~area_etl_spark.sources.load.write_versioned`."""
+
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        prev = None
+        if current_version(table_dir) is not None:
+            prev = read_versioned(batch_df.sparkSession, table_dir)
+        # materialize BEFORE the publish: the new version must not lazily
+        # re-read the old snapshot dir mid-GC
+        rows = merge(batch_df, batch_id, prev).localCheckpoint(eager=True)
+        n = rows.count()
+        if n > max_rows:
+            raise SnapshotScaleError(too_big(n))
+        write_versioned(rows, table_dir, keep_versions=keep_versions)
+
+    return _apply
+
+
 def make_versioned_appender(
     table_dir: str,
-    fmt: str = "parquet",
     keep_versions: int = 4,
     max_snapshot_rows: int = 10_000_000,
 ):
@@ -181,48 +204,32 @@ def make_versioned_appender(
     measured rewrite-cost curve is in docs/SCALE.md §Streaming
     (tools/streambench.py).
     """
-    from area_etl_spark.sources.load import (
-        current_version,
-        read_versioned,
-        write_versioned,
-    )
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def merge(batch_df: DataFrame, batch_id: int, prev: DataFrame | None) -> DataFrame:
         stamped = batch_df.withColumn("_batch_id", F.lit(batch_id).cast("long"))
-        if current_version(table_dir) is not None:
-            base = read_versioned(spark, table_dir, fmt=fmt).where(
-                F.col("_batch_id") != batch_id
-            )
-            stamped = base.unionByName(stamped)
-        # materialize BEFORE the publish: the new version must not lazily
-        # re-read the old snapshot dir mid-GC
-        rows = stamped.localCheckpoint(eager=True)
-        n = rows.count()
-        if n > max_snapshot_rows:
-            raise SnapshotScaleError(
-                f"versioned snapshot at {table_dir} would reach {n} rows "
-                f"(> max_snapshot_rows={max_snapshot_rows}); this sink "
-                "rewrites O(table) per batch — use incremental_ingest's "
-                "partitioned layout for fact-scale streams"
-            )
-        write_versioned(rows, table_dir, fmt=fmt, keep_versions=keep_versions)
+        if prev is None:
+            return stamped
+        return prev.where(F.col("_batch_id") != batch_id).unionByName(stamped)
 
-    return _apply
+    return _versioned_sink(table_dir, keep_versions, max_snapshot_rows, merge, lambda n: (
+        f"versioned snapshot at {table_dir} would reach {n} rows "
+        f"(> max_snapshot_rows={max_snapshot_rows}); this sink "
+        "rewrites O(table) per batch — use incremental_ingest's "
+        "partitioned layout for fact-scale streams"
+    ))
 
 
 def versioned_append_sink(
     stream_df: DataFrame,
     table_dir: str,
     checkpoint_dir: str,
-    fmt: str = "parquet",
     keep_versions: int = 4,
 ):
     """Structured Streaming sink wiring for :func:`make_versioned_appender`
     (availableNow-friendly; returns the started query)."""
     return (
         stream_df.writeStream.foreachBatch(
-            make_versioned_appender(table_dir, fmt=fmt, keep_versions=keep_versions)
+            make_versioned_appender(table_dir, keep_versions=keep_versions)
         )
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
@@ -252,30 +259,17 @@ def make_leaderboard_applier(
     matters.
     """
     from area_etl_spark.operators.aggregates import agg_state, merge_agg_states
-    from area_etl_spark.sources.load import (
-        current_version,
-        read_versioned,
-        write_versioned,
-    )
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def merge(batch_df: DataFrame, batch_id: int, prev: DataFrame | None) -> DataFrame:
         part = agg_state(batch_df, keys, value_col)
-        if current_version(state_dir) is not None:
-            prev = read_versioned(spark, state_dir)
-            part = merge_agg_states([prev, part], keys)
-        state = part.localCheckpoint(eager=True)
-        n = state.count()
-        if n > max_state_rows:
-            raise SnapshotScaleError(
-                f"leaderboard state at {state_dir} would reach {n} distinct "
-                f"keys (> max_state_rows={max_state_rows}); a key space this "
-                "large is fact-shaped — partition the state (33f layout) or "
-                "aggregate to a coarser key"
-            )
-        write_versioned(state, state_dir)
+        return part if prev is None else merge_agg_states([prev, part], keys)
 
-    return _apply
+    return _versioned_sink(state_dir, 2, max_state_rows, merge, lambda n: (
+        f"leaderboard state at {state_dir} would reach {n} distinct "
+        f"keys (> max_state_rows={max_state_rows}); a key space this "
+        "large is fact-shaped — partition the state (33f layout) or "
+        "aggregate to a coarser key"
+    ))
 
 
 def make_expectation_monitor(

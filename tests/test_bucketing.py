@@ -293,6 +293,11 @@ def test_publish_snapshot_cross_table_atomicity(spark, tables, tmp_path):
     s3 = publish_snapshot({"facts": facts1, "dims": dims1}, wh)
     assert s3 == 100  # grows past orphans, never reuses
     assert read_snapshot_table(spark, wh, "facts").count() == 10
+    # GC swept the never-published orphan and the snapshot past retention
+    assert not os.path.exists(os.path.join(wh, "facts", "s=99"))
+    for t in ("facts", "dims"):
+        assert not os.path.exists(os.path.join(wh, t, f"s={s1}"))
+        assert os.path.isdir(os.path.join(wh, t, f"s={s2}"))
 
 
 def test_snapshot_gc_grace_protects_pinned_reader(spark, tables, tmp_path):

@@ -156,6 +156,21 @@ def test_versioned_table_publish_and_time_travel(spark, tmp_path):
         read_versioned(spark, t, version=1).count()
     assert read_versioned(spark, t, version=2).count() == 2
 
+    # partitioned publish (the runner's versioned mode for partitioned
+    # specs): hive k=<value> dirs land under v=<n>, read-back is complete
+    import os
+
+    pt = str(tmp_path / "ptbl")
+    p1 = write_versioned(d2, pt, partition_by=["k"])
+    assert sorted(
+        d for d in os.listdir(os.path.join(pt, f"v={p1}")) if d.startswith("k=")
+    ) == ["k=2", "k=3"]
+    assert read_versioned(spark, pt).count() == 2
+    write_versioned(d2.union(d1), pt, partition_by=["k"])
+    assert read_versioned(spark, pt).count() == 3
+    assert read_versioned(spark, pt).where("k = 1").count() == 1
+    assert read_versioned(spark, pt, version=p1).count() == 2
+
 
 def test_versioned_table_crash_leaves_readers_unaffected(spark, tmp_path):
     """A crashed write (data dir exists, manifest never swapped) is
@@ -472,7 +487,7 @@ def test_incremental_publish_cycle_crash_resume_exactly_once(spark, tmp_path, mo
     from pyspark.sql import functions as F
 
     from area_etl_spark.sources.load import (
-        _read_snapshot_no,
+        _read_pointer,
         incremental_publish_cycle,
         read_snapshot_table,
     )
@@ -521,7 +536,7 @@ def test_incremental_publish_cycle_crash_resume_exactly_once(spark, tmp_path, mo
 
     with pytest.raises(RuntimeError, match="transform crashed"):
         incremental_publish_cycle(spark, landing, wh, bm, "day", ["k"], exploding)
-    assert _read_snapshot_no(wh) == 1 and states() == (raw1, agg1)
+    assert _read_pointer(wh, "_SNAPSHOT") == 1 and states() == (raw1, agg1)
     assert open(bm).read() == "02"
 
     # (b) crash AFTER publish, BEFORE bookmark commit — fault injection
@@ -540,7 +555,7 @@ def test_incremental_publish_cycle_crash_resume_exactly_once(spark, tmp_path, mo
             incremental_publish_cycle(spark, landing, wh, bm, "day", ["k"], agg)
     finally:
         monkeypatch.setattr(os, "replace", real_replace)
-    assert _read_snapshot_no(wh) == 2          # the swap landed...
+    assert _read_pointer(wh, "_SNAPSHOT") == 2  # the swap landed...
     raw2, agg2 = states()
     assert len(raw2) == 4                       # ...with day=03 visible
     assert open(bm).read() == "02"              # ...but the bookmark did not
@@ -564,7 +579,7 @@ def test_incremental_publish_cycle_crash_resume_exactly_once(spark, tmp_path, mo
         None,
         None,
     )
-    assert _read_snapshot_no(wh) == 3
+    assert _read_pointer(wh, "_SNAPSHOT") == 3
 
 
 def test_incremental_publish_cycle_concurrent_runner_fails_fast(spark, tmp_path):
@@ -577,7 +592,7 @@ def test_incremental_publish_cycle_concurrent_runner_fails_fast(spark, tmp_path)
 
     from area_etl_spark.sources.load import (
         ConcurrentWriteError,
-        _read_snapshot_no,
+        _read_pointer,
         _writer_lock,
         incremental_publish_cycle,
     )
@@ -598,7 +613,7 @@ def test_incremental_publish_cycle_concurrent_runner_fails_fast(spark, tmp_path)
     with _writer_lock(wh):  # another runner is mid-cycle
         with pytest.raises(ConcurrentWriteError):
             incremental_publish_cycle(spark, landing, wh, bm, "day", ["k"], agg)
-    assert _read_snapshot_no(wh) == 1 and open(bm).read() == "01"
+    assert _read_pointer(wh, "_SNAPSHOT") == 1 and open(bm).read() == "01"
     # the holder released -> the retry wins
     assert incremental_publish_cycle(spark, landing, wh, bm, "day", ["k"], agg)[0] == 2
 
